@@ -433,7 +433,7 @@ def agg_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     This exact form is the CORRECTNESS REFERENCE only: Spark's exact
     percentile buffers every group value in one reducer, so it cannot
     scale past bounded groups. q_agg_robust_stats_approx below is the
-    registered scale path (benched in HEADLINE); this query stays the
+    registered scale path; this query stays the
     sf0.01 oracle anchor the approx form is tested against.
     """
     li = load_table(spark, sf_dir, "lineitem")

@@ -27,6 +27,7 @@ from ..tables import load_table
 # ---------------------------------------------------------------------------
 
 _GAP_MINUTES = 360
+_DAY_US = 86_400 * 1_000_000
 
 _ORACLE_SESSIONIZE = f"""
 WITH flagged AS (
@@ -60,22 +61,30 @@ def sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
+    # exact microsecond deltas, like the oracle's interval compare: a
+    # whole-second cast would merge a 21600.5 s gap into one session
     gap_ok = (
-        F.col("ts").cast("long") - F.lag("ts").over(w).cast("long")
-    ) <= _GAP_MINUTES * 60
+        F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
+    ) <= _GAP_MINUTES * 60 * 1_000_000
     flagged = ev.withColumn(
         "is_new", F.when(gap_ok, F.lit(0)).otherwise(F.lit(1))
     )
     numbered = flagged.withColumn("session_num", F.sum("is_new").over(run))
+    # duration_sec spells the oracle's double arithmetic step for step,
+    # so both engines round the same double at micros ending in 500:
+    # EXTRACT(EPOCH FROM interval) is whole days in seconds + the
+    # sub-day remainder / 1e6, and DuckDB's ROUND(x, 3) is
+    # round-half-away(x * 1000) / 1000
+    span_us = F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))
+    rem_us = span_us % _DAY_US
+    epoch_s = (span_us - rem_us) / 1e6 + rem_us / 1e6
     return (
         numbered.groupBy("user_id", "session_num")
         .agg(
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.max("ts").cast("double") - F.min("ts").cast("double"), 3
-            ).alias("duration_sec"),
+            (F.round(epoch_s * 1000) / 1000).alias("duration_sec"),
         )
         .orderBy("user_id", "session_num")
     )

@@ -162,35 +162,6 @@ def ensure_fixtures() -> None:
             f.write(json.dumps(e) + "\n")
 
 
-def generate_scaled_corpus(dst_dir: str, k: int) -> tuple[str, str]:
-    """K×-scaled reference-shaped JSON corpus (VERDICT r6 #6): 12·K
-    songs, 300·K events over 8·K users, events split across min(K, 32)
-    newline-delimited files so the staging scan parallelizes the way a
-    many-object S3 prefix would. Deterministic (seed 42); idempotent.
-    Returns (log_dir, song_dir)."""
-    log_dir = os.path.join(dst_dir, "log_data")
-    song_dir = os.path.join(dst_dir, "song_data")
-    if os.path.exists(os.path.join(song_dir, "songs.json")) and os.path.exists(
-        os.path.join(log_dir, "events-000.json")
-    ):
-        return log_dir, song_dir
-    rng = random.Random(42)
-    songs = _gen_songs(rng, n=12 * k)
-    events = _gen_events(rng, songs, n=300 * k, n_users=8 * k)
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(song_dir, exist_ok=True)
-    with open(os.path.join(song_dir, "songs.json"), "w") as f:
-        for s in songs:
-            f.write(json.dumps(s) + "\n")
-    n_files = min(k, 32)
-    per = (len(events) + n_files - 1) // n_files
-    for fi in range(n_files):
-        with open(os.path.join(log_dir, f"events-{fi:03d}.json"), "w") as f:
-            for e in events[fi * per : (fi + 1) * per]:
-                f.write(json.dumps(e) + "\n")
-    return log_dir, song_dir
-
-
 # ---------------------------------------------------------------------------
 # Staging schemas + the JSONPaths-style mapping (reference DDL:
 # staging_events sql_queries.py:19-38, staging_songs :40-51).
@@ -444,8 +415,8 @@ def run_pipeline(
     # (localCheckpoint = the staging TABLE the reference's COPY builds;
     # without it every transform re-reads and re-parses the JSON).
     # The checkpointed blocks stay pinned for the session — bounded at
-    # two <=300-row frames here, and the CLI/etl_baseline entry points
-    # exit right after; registry queries never call run_pipeline.
+    # two <=300-row frames here, and the CLI entry point exits right
+    # after; registry queries never call run_pipeline.
     se = _staged(
         "copy_staging_events",
         lambda: load_staging_events(spark, log_dir=log_dir).localCheckpoint(

@@ -99,7 +99,7 @@ def get_spark(
         # sketch ops allocate heavily; a small heap turns into GC thrash)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # Long-lived multi-query sessions (the 377-query sweeps, the
-        # 135-query bench, any real analytics driver) outgrow two JVM
+        # perfbench query mix, any real analytics driver) outgrow two JVM
         # compilation budgets sized for single-query jobs:
         #  - spark.sql.codegen.cache.maxEntries (default 100): with
         #    >100 distinct plans per session every generated class is
@@ -114,14 +114,15 @@ def get_spark(
         # Both are session-lifetime knobs, not data-scale knobs: the
         # same values are right at sf0.001 and at 100 TB.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
-        # APPEND to caller-supplied driver JVM options (VERDICT r13 #4:
-        # a bare .config() would clobber them); callers pass theirs via
-        # $SPARK_GRAFT_DRIVER_JAVA_OPTS.
+        # Caller-supplied driver JVM options go LAST (VERDICT r13 #4:
+        # a bare .config() would clobber them): the JVM takes the last
+        # copy of a repeated flag, so $SPARK_GRAFT_DRIVER_JAVA_OPTS can
+        # override the code-cache size set here.
         .config(
             "spark.driver.extraJavaOptions",
             (
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-                + " -XX:ReservedCodeCacheSize=512m"
+                "-XX:ReservedCodeCacheSize=512m "
+                + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
             ).strip(),
         )
         .config("spark.ui.enabled", "false")

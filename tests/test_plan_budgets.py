@@ -1,4 +1,4 @@
-"""Plan-shape regression gate: every headline query's physical plan
+"""Plan-shape regression gate: every budgeted query's physical plan
 must not grow NEW shuffles. Exchange count is the single best proxy
 for "the plan you'd want at 100x" — broadcast demotions, lost
 partial-agg, or a join strategy regression all show up as extra

@@ -1,7 +1,7 @@
 """CI freshness gate for REGISTRY.md (VERDICT r3 #8): the committed
 index must match a live regeneration — every registered query appears
-with its current file:line, oracle status, headline membership, and
-exchange budget. No Spark session needed."""
+with its current file:line, oracle status and exchange budget. No
+Spark session needed."""
 
 from __future__ import annotations
 

@@ -30,6 +30,50 @@ def test_sessions_nonoverlapping_and_gapped(sessions):
             assert gap > 360 * 60, f"user {user}: {gap}s gap should have merged"
 
 
+def test_sessionize_boundary_cases_match_oracle(spark, tmp_path):
+    """Exact-interval semantics the oracle has and whole-second or
+    epoch-double arithmetic loses: a gap 0.5 s over the 360-minute limit
+    starts a new session (sf0.1's user 805 has a 21600.71 s gap), and
+    spans whose microseconds end in 500 round like the oracle's ROUND
+    (two sf0.1 sessions that earlier spellings put 0.001 s off)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.validate import compare
+
+    t0 = 1704067200 * 10**6  # 2024-01-01 00:00:00, a whole second
+    a, b = 1705787988450415, 1705821079301915  # 33090.8515 s apart
+    ts_by_user = {
+        805: [t0, t0 + 21_600_500_000],
+        1345: [1704260641472801, 1704264739927301],  # 4098.4545 s
+        1221: [a, (a + b) // 2, b],  # midpoint keeps both gaps under 6 h
+    }
+    user_ids = [u for u, ts in ts_by_user.items() for _ in ts]
+    n = len(user_ids)
+    events = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(
+                [t for ts in ts_by_user.values() for t in ts], pa.timestamp("us")
+            ),
+            "user_id": pa.array(user_ids, pa.int64()),
+            "event_type": ["view"] * n,
+            "value": [1.0] * n,
+            "props": ["{}"] * n,
+        }
+    )
+    path = tmp_path / "events.parquet"
+    pq.write_table(events, str(path))
+
+    got = registry.QUERIES["q_sessionize_gap"](spark, str(tmp_path)).toPandas()
+    assert sorted(got[got.user_id == 805].n_events) == [1, 1]
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+        want = con.sql(registry.ORACLE["q_sessionize_gap"]).df()
+    assert not compare("q_sessionize_gap", got, want)
+
+
 def test_session_duration_consistent(sessions):
     for r in sessions:
         assert r.duration_sec == pytest.approx(

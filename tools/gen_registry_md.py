@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Generate REGISTRY.md — the audit index of every registered query:
-id → defining file:line → oracled? → bench-headline? → exchange budget.
+id → defining file:line → oracled? → exchange budget.
 
 Run:  python tools/gen_registry_md.py          # rewrite REGISTRY.md
 The CI gate (tests/test_registry_md.py) regenerates the table in
@@ -19,12 +19,10 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
 def build_registry_md() -> str:
-    import bench
     from sparkifydb_datawarehouse_spark import registry
     from test_plan_budgets import EXCHANGE_BUDGETS  # type: ignore[import-not-found]
 
     registry.load_all_modules()
-    headline = set(bench.HEADLINE)
 
     rows = []
     for qid in sorted(registry.QUERIES):
@@ -38,7 +36,6 @@ def build_registry_md() -> str:
                 qid,
                 f"`{path}:{line}`",
                 "oracle" if qid in registry.ORACLE else "rows-only",
-                "yes" if qid in headline else "",
                 str(budget) if budget is not None else "",
             )
         )
@@ -53,11 +50,10 @@ def build_registry_md() -> str:
         "",
         f"{len(rows)} registered queries — {n_oracled} DuckDB-oracled, "
         f"{len(rows) - n_oracled} rows-only (documented nondeterminism), "
-        f"{sum(1 for r in rows if r[3])} bench-headline, "
-        f"{sum(1 for r in rows if r[4])} with a pinned exchange budget.",
+        f"{sum(1 for r in rows if r[3])} with a pinned exchange budget.",
         "",
-        "| query id | defined at | check | headline | exchange budget |",
-        "|---|---|---|---|---|",
+        "| query id | defined at | check | exchange budget |",
+        "|---|---|---|---|",
     ]
     for r in rows:
         lines.append("| " + " | ".join(r) + " |")

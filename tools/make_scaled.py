@@ -40,8 +40,7 @@ keeps WITHIN-group pairs at j ≈ 0.9 — bimodal similarity, pair count
 the natural variant only changes documents, so the probe fixtures
 need not duplicate the 1.5 GB fact tables.
 
-Run the bench against the result with:
-    SPARK_GRAFT_SF_DIR=data/scaled_10x python bench.py
+Probe queries against the result with tools/scale_probe.py.
 """
 
 from __future__ import annotations

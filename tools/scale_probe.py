@@ -9,12 +9,12 @@ and data/scaled_100x (100x) — fixtures produced by tools/make_scaled.py,
 which offsets keys so join relationships hold and perturbs documents so
 near-dup structure stays within-replica (pair output grows ~K, not K^2).
 
-Timing protocol matches bench.py: noop-format write forces full
+Timing protocol: noop-format write forces full
 execution without sink cost; one untimed 1x warmup run per query pays
 the codegen-compile cost, then min-of-2 at every scale. Emits one
 markdown table row per query with the 10x/1x and 100x/10x wall ratios —
 the numbers SCALING.md section (s) records. Run on a quiet host (the
-probe prints the bench's synthetic-control load index first).
+probe prints a synthetic-control load time first).
 """
 
 from __future__ import annotations
